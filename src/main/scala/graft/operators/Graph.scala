@@ -2,8 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, IntegerType, LongType,
-  StructField, StructType}
+import org.apache.spark.sql.types.DecimalType
 
 /** Graph analytics over relational edge tables. PageRank-style centrality
   * is a standard pretraining-data quality signal (host/domain importance
@@ -386,63 +385,6 @@ object Graph {
       .groupBy(col("id")).agg(count(lit(1)).as("n_triangles"))
   }
 
-  /** k-hop reachability counts: for each seed node, how many DISTINCT
-    * nodes sit at BFS distance exactly 1, 2, …, `k` — the neighborhood
-    * growth profile (contamination blast radius on a near-dup graph,
-    * influence reach on an interaction graph). Input: (src, dst) edges
-    * (treated as directed; pre-union the reverse for undirected),
-    * `seeds` with a `seed` column.
-    *
-    * Distributed BFS, frontier form: each hop joins the CURRENT frontier
-    * (not the visited set) against the edge list, then anti-joins the
-    * visited set — per-hop cost |frontier⋈edges|, the textbook
-    * level-synchronous formulation. The visited/frontier tables are
-    * localCheckpoint'ed each hop so the k-deep lineage never re-executes
-    * and the planner sees node-sized leaf tables.
-    *
-    * The edge set is deduped and cut ONCE, but each hop's join does
-    * re-shuffle it: with AQE enabled (the shipped config),
-    * localCheckpoint's LogicalRDD does NOT surface its partitioning to
-    * the adaptive planner, so pre-repartitioning by `src` buys nothing
-    * and costs an extra exchange (verified empirically on this Spark
-    * version; it also would pin hub-node skew into the materialized RDD
-    * where AQE's skew-join split can no longer reach it). If a future
-    * Spark propagates checkpoint partitioning under AQE, the k-hops-one-
-    * edge-shuffle layout becomes worth revisiting.
-    *
-    * Output: (seed, dist, n_nodes), dist in 1..k, rows only where
-    * n_nodes > 0. The seed itself (dist 0) is not emitted.
-    */
-  def kHopCounts(edges: DataFrame, seeds: DataFrame, k: Int = 3): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // one cut for the (possibly join-derived) edge set — every hop joins
-    // it on src, and the final union references every hop; plain
-    // distinct() keeps the partial aggregate collapsing duplicates
-    // map-side before the one dedup shuffle (see scaladoc for why a
-    // src-repartition here is a net loss under AQE)
-    val e = edges.select(col("src"), col("dst")).distinct()
-      .localCheckpoint(false)
-    var visited = seeds.select(col("seed"), col("seed").as("node"))
-      .distinct().localCheckpoint(false)
-    var frontier = visited
-    val levels = (1 to k).map { d =>
-      val next = frontier.join(e, col("node") === col("src"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(visited, Seq("seed", "node"), "left_anti")
-        .localCheckpoint(false)
-      // visited is a union of already-checkpointed frontiers — k cached
-      // leaf scans, constant lineage depth — so re-materializing the
-      // whole (growing) visited set each hop would only duplicate
-      // blocks already in the block manager
-      visited = visited.unionByName(next)
-      frontier = next
-      next.groupBy(col("seed"))
-        .agg(count(lit(1)).as("n_nodes")).withColumn("dist", lit(d))
-    }
-    levels.reduce(_ unionByName _)
-      .select(col("seed"), col("dist"), col("n_nodes"))
-  }
-
   /** Scale-adaptive per-hop checkpoint policy for [[reachSketch]] —
     * the batch analogue of the streaming
     * [[graft.streaming.StreamOps.adaptiveStatePartitions]] discipline
@@ -466,146 +408,112 @@ object Graph {
     * ~1 GiB of input up (multi-TB production graphs, where re-executing
     * a hop join is minutes and materializing V rows is not), and the
     * caller's `deltaOnly` mode always forces them (the changed-set diff
-    * re-reads each hop's table — [[reachSketch]]'s own require). Output
-    * is invariant either way — the checkpoint is a lineage boundary,
-    * never a semantic. `SPARK_GRAFT_HOP_CHECKPOINT` (true/false)
-    * overrides for A/B experiments.
+    * re-reads each hop's table — [[reachSketch]]'s own require). An
+    * input size of 0 or less is UNKNOWN (what
+    * [[graft.streaming.StreamOps.pathBytes]] returns for a path it cannot
+    * stat) and fails safe to checkpoints ON: the fused plan is only the
+    * cheap layout when the input is known to be small. Output is
+    * invariant either way — the checkpoint is a lineage boundary, never
+    * a semantic; A/B experiments pass `checkpoint =` directly.
     */
   def adaptiveHopCheckpoint(inputBytes: Long,
       thresholdBytes: Long = 1L << 30): Boolean =
-    sys.env.get("SPARK_GRAFT_HOP_CHECKPOINT").flatMap { v =>
-      val parsed = v.toBooleanOption
-      if (parsed.isEmpty) System.err.println(
-        s"[graft] ignoring invalid SPARK_GRAFT_HOP_CHECKPOINT='$v' " +
-        "(need true/false); using the adaptive value")
-      parsed
-    }.getOrElse(inputBytes > thresholdBytes)
+    inputBytes <= 0 || inputBytes > thresholdBytes
 
-  /** [[kHopCounts]] with the per-seed reach sets held as BITMASK COLUMNS
-    * instead of (seed, node) rows — identical output, one decision per
-    * bit (optimization-guide §8: decide with small rows).
+  /** k-hop reachability counts: for each seed node, how many DISTINCT
+    * nodes sit at BFS distance exactly 1, 2, …, `k` — the neighborhood
+    * growth profile (contamination blast radius on a near-dup graph,
+    * influence reach on an interaction graph). Input: (src, dst) edges
+    * (treated as directed; pre-union the reverse for undirected),
+    * `seeds` with a `seed` column. Output: (seed, dist, n_nodes), seed
+    * as LONG, dist in 1..k, rows only where n_nodes > 0; the seed itself
+    * (dist 0) is not counted.
     *
-    * The row form materializes every (seed, node) pair three times per
-    * hop: the frontier⋈edges join EXPLODES to |frontier|×avg-degree rows
-    * (22M at sf0.1 hop 3, from a 1.7M-pair frontier over 1.2M edges),
-    * then a distinct shuffles them, then a left_anti re-shuffles against
-    * the (growing) visited set — measured 1.0/1.8/3.2 s for hops 1/2/3
-    * at sf0.1. Here a node's reach-from-which-seeds set is ⌈S/64⌉ LONG
-    * words on ONE row per reached node, so a hop is: edges ⋈ ball on
-    * src (payload = the words, not pairs), `bit_or` partial-aggregated
-    * by dst (the dedup is the OR — map-side combined, nothing explodes),
-    * one V-row full_outer merge with the previous ball, and the newly-
-    * reached bits are `merged & ~previous` per word. Per-seed counts
-    * read off the new bits (set-bit explode of V rows, not E). State is
-    * V×⌈S/64⌉ longs — 64× smaller than the row form's pair set, and
-    * every shuffle is node-sized. The seed set is collected to the
-    * driver to assign bit positions (bounded: it is the caller's probe
-    * set, the same boundedness as the hot-key seed collects; it also
-    * fixes the column COUNT, which must be known at plan time).
+    * Per-seed reach sets ride as BITMASKS, not (seed, node) rows
+    * (optimization-guide §8: decide with small rows). Every distinct seed
+    * gets an id from `monotonically_increasing_id` — `chunk = id >>> 6`,
+    * `bit = id & 63` — and the ball is ONE LONG word per (chunk, node)
+    * row: bit b of the word at (c, v) says seed (c, b) reaches v. Any
+    * distinct id works (a boundary between the seed frame's partitions
+    * only leaves a chunk part-filled), but the ids must not change
+    * between the hops and the read-off, so the seed projection is
+    * localCheckpointed once, before its dedup shuffle. No width guard,
+    * no driver collect: the fused layout starts no job before the
+    * caller's first action (under AQE a checkpoint runs the shuffle
+    * stages below it as it is built, so the cut layout's per-hop cuts
+    * do), and an empty seed set flows through as an empty frame.
     *
-    * Output is bit-identical to [[kHopCounts]] — exact BFS both ways,
-    * same (seed, dist, n_nodes) rows, n_nodes > 0 only, seed not
-    * counted — Round15Spec asserts equality on the spec fixture and the
-    * sf0.001 order graph; the g07/g08/g18 oracles certify it end-to-end.
+    * A hop is: edges ⋈ changed rows on src (payload = the word, not
+    * pairs), `bit_or` grouped by (chunk, dst) — the dedup IS the OR,
+    * map-side combined, nothing explodes — then one full_outer merge
+    * with the previous ball on (chunk, node); the newly reached bits are
+    * `o & ~b`. Only rows whose word CHANGED enter the next hop (the
+    * [[reachSketch]] delta argument): OR is idempotent and an unchanged
+    * row was already merged into all its out-neighbors, so bits still
+    * arrive exactly one hop after their source gains them and the BFS
+    * distances stay exact. Per-seed counts explode the set bits of the
+    * new words and join back to the seed table on (chunk, bit).
     *
-    * `edgesDeduped = true` skips the defensive distinct for callers
-    * (Shared.orderGraphEdges) whose edge set is already DISTINCT and
-    * checkpointed — re-deduping a proven-distinct 100 TB edge table is a
-    * wasted shuffle (the [[reachSketch]] contract).
+    * State is bounded by the reached (chunk, node) pairs — 1/64 of the
+    * row form's (seed, node) pairs when chunks are full, never more than
+    * them (the row form also explodes to |frontier|×avg-degree rows per
+    * hop before a distinct and an anti-join: 22M rows at sf0.1 hop 3),
+    * and every shuffle carries one word per row. Output equals the
+    * row-form BFS — Round15Spec asserts it on the spec fixture, the
+    * sf0.001 order graph and a multi-chunk seed set; the g07/g08/g18
+    * oracles certify it end-to-end.
+    *
+    * `checkpoint = false` fuses the hop chain into one plan (read-offs
+    * re-execute shared hop prefixes — the [[adaptiveHopCheckpoint]]
+    * trade); `edgesDeduped = true` skips the defensive distinct for
+    * callers (Shared.orderGraphEdges) whose edge set is already DISTINCT
+    * and checkpointed — the [[reachSketch]] contract.
     */
   def kHopCountsBitset(edges: DataFrame, seeds: DataFrame, k: Int = 3,
       edgesDeduped: Boolean = false, checkpoint: Boolean = true)
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = edges.sparkSession
-    val seedArr: Array[Long] = seeds.select(col("seed").cast("long"))
-      .distinct().orderBy(col("seed")).collect().map(_.getLong(0))
-    val outSchema = StructType(Seq(
-      StructField("seed", LongType, nullable = false),
-      StructField("dist", IntegerType, nullable = false),
-      StructField("n_nodes", LongType, nullable = false)))
-    if (seedArr.isEmpty)
-      return spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), outSchema)
-    // width guard: past ~4096 seeds the mask spans > 64 word COLUMNS and
-    // wide-row codegen degrades (method-size splits, per-row copy cost
-    // grows with the full width even for sparse masks) — the row form is
-    // the right shape when the probe set itself is huge. Identical
-    // output either way; the fallback's defensive distinct is the price
-    // of its public contract.
-    if (seedArr.length > 4096)
-      return kHopCounts(edges, seeds, k)
-        .select(col("seed").cast("long").as("seed"), col("dist"),
-          col("n_nodes"))
-    val nW = (seedArr.length + 63) >>> 6
-    // checkpoint=false fuses the whole k-hop chain into one plan —
-    // read-offs re-execute shared hop prefixes, the right trade exactly
-    // when [[adaptiveHopCheckpoint]] says per-hop job overhead dominates
-    // hop compute (output invariant either way).
     def cut(df: DataFrame): DataFrame =
       if (checkpoint) df.localCheckpoint(false) else df
     val e = if (edgesDeduped) edges.select(col("src"), col("dst"))
       else cut(edges.select(col("src"), col("dst")).distinct())
-    import spark.implicits._
-    // driver-local relation (the collected seed set) — no cut needed
-    val seedBits = seedArr.zipWithIndex.toSeq.toDF("seed", "bit")
-    val ws = (0 until nW).map(i => col(s"w$i"))
+    // the cut sits below the dedup shuffle, so it adds no job of its own;
+    // a repeated seed keeps its smallest id and leaves the other bits unset
+    val ids = seeds.select(col("seed").cast("long").as("seed"))
+      .withColumn("id", monotonically_increasing_id())
+      .localCheckpoint(false)
+      .groupBy(col("seed")).agg(min(col("id")).as("id"))
+      .select(col("seed"), shiftrightunsigned(col("id"), 6).as("chunk"),
+        col("id").bitwiseAND(63L).cast("int").as("bit"))
     // hop-0 ball: each seed node carries exactly its own bit
-    var ball = seedBits.select(col("seed").as("node") +:
-      (0 until nW).map(i => expr(
-        s"CASE WHEN bit >= ${i * 64} AND bit < ${(i + 1) * 64} " +
-        s"THEN shiftleft(CAST(1 AS BIGINT), CAST(bit % 64 AS INT)) " +
-        s"ELSE CAST(0 AS BIGINT) END").as(s"w$i")): _*)
-    // only CHANGED nodes enter the hop join (the [[reachSketch]] delta
-    // argument, g22-certified shape): OR is idempotent, and a node whose
-    // mask changed at hop j propagates its full mask at hop j+1, so a
-    // node unchanged since hop j has already been merged into all its
-    // out-neighbors — bits still arrive exactly one hop after their
-    // source gains them, which is what keeps the BFS distances exact.
+    var ball = ids.select(col("chunk"), col("seed").as("node"),
+      expr("shiftleft(CAST(1 AS BIGINT), bit)").as("w"))
     var changed = ball
+    val b = coalesce(col("b.w"), lit(0L))
+    val o = coalesce(col("o.w"), lit(0L))
     val perHop = (1 to k).map { d =>
-      // candidate mask per dst: OR of in-neighbors' current balls — the
-      // dedup IS the OR, partial-aggregated map-side; nothing explodes
-      val orM = e.join(changed, e("src") === changed("node"))
-        .select(e("dst").as("node") +: ws: _*)
-        .groupBy(col("node"))
-        .agg(expr("bit_or(w0)").as("w0"),
-          (1 until nW).map(i => expr(s"bit_or(w$i)").as(s"w$i")): _*)
-      // merge with the previous ball; new bits = candidate & ~previous
+      val hop = e.join(changed, col("src") === col("node"))
+        .groupBy(col("chunk"), col("dst").as("node"))
+        .agg(bit_or(col("w")).as("w"))
       val merged = cut(
-        ball.as("b").join(orM.as("o"), Seq("node"), "full_outer")
-          .select(col("node") +:
-            ((0 until nW).map(i => expr(
-                s"coalesce(b.w$i, CAST(0 AS BIGINT)) | " +
-                s"coalesce(o.w$i, CAST(0 AS BIGINT))").as(s"w$i")) ++
-             (0 until nW).map(i => expr(
-                s"coalesce(o.w$i, CAST(0 AS BIGINT)) & " +
-                s"~coalesce(b.w$i, CAST(0 AS BIGINT))").as(s"n$i"))): _*))
-      ball = merged.select(col("node") +: ws: _*)
-      changed = merged
-        .filter((0 until nW).map(i => col(s"n$i") =!= 0L).reduce(_ || _))
-        .select(col("node") +: ws: _*)
-      // per-seed counts of this hop's newly-set bits: set-bit explode of
-      // the (node-sized) new masks, then bit → seed via the index table
-      val newWords = (0 until nW).map(i => s"n$i").mkString(",")
-      val bitsOf =
-        s"filter(flatten(transform(sequence(0, ${nW - 1}), i -> " +
-        s"transform(sequence(0, 63), j -> CASE WHEN " +
-        s"(shiftright(element_at(array($newWords), i + 1), j) & 1) = 1 " +
-        s"THEN i * 64 + j ELSE -1 END))), x -> x >= 0)"
-      merged
-        .filter((0 until nW).map(i => col(s"n$i") =!= 0L).reduce(_ || _))
-        .select(explode(expr(bitsOf)).as("bit"))
-        .groupBy(col("bit")).agg(count(lit(1)).as("n_nodes"))
-        .join(broadcast(seedBits), "bit")
+        ball.as("b").join(hop.as("o"), Seq("chunk", "node"), "full_outer")
+          .select(col("chunk"), col("node"), b.bitwiseOR(o).as("w"),
+            o.bitwiseAND(bitwise_not(b)).as("n")))
+      ball = merged.select(col("chunk"), col("node"), col("w"))
+      val fresh = merged.filter(col("n") =!= 0L)
+      changed = fresh.select(col("chunk"), col("node"), col("w"))
+      fresh.select(col("chunk"), explode(
+          expr("filter(sequence(0, 63), j -> (shiftright(n, j) & 1) = 1)"))
+          .as("bit"))
+        .groupBy(col("chunk"), col("bit")).agg(count(lit(1)).as("n_nodes"))
+        .join(ids, Seq("chunk", "bit"))
         .select(col("seed"), lit(d).as("dist"), col("n_nodes"))
     }
     perHop.reduce(_ unionByName _)
-      .select(col("seed"), col("dist"), col("n_nodes"))
   }
 
   /** Sketch-based k-hop reach estimation — the 100 TB twin of the exact
-    * [[kHopCounts]] BFS (HyperANF/HyperBall's iteration scheme, Boldi,
+    * [[kHopCountsBitset]] BFS (HyperANF/HyperBall's iteration scheme, Boldi,
     * Rosa & Vigna 2011, on a MinHash register family instead of HLL so
     * every arithmetic step is cross-engine exact).
     *
@@ -633,7 +541,7 @@ object Graph {
     *
     * Output: (seed, dist, est_reach) for dist in 1..k, est_reach the
     * rounded ball-size estimate (seed itself included, matching
-    * 1 + Σ n_nodes of [[kHopCounts]]).
+    * 1 + Σ n_nodes of [[kHopCountsBitset]]).
     *
     * `intRegisters` (VERDICT r10 item 2) narrows the registers to
     * H = 2^31 and PACKS TWO per LONG column (m/2 columns, componentwise

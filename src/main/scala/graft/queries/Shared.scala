@@ -250,10 +250,10 @@ private[graft] object Shared {
       val e = orderGraphEdges(s, dir)
       val seeds = e.select(col("src").as("seed")).distinct()
         .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
-      // the BITSET form of the exact BFS (identical output, certified by
-      // Round15Spec + the g07/g08/g18 oracles): per-seed reach sets ride
-      // as mask columns, so no hop materializes (seed, node) pair rows —
-      // measured 4.5 s -> see OPTIMIZATION_r15.md. edgesDeduped:
+      // the exact BFS (certified against the row-form oracle by
+      // Round15Spec and end-to-end by the g07/g08/g18 oracles): per-seed
+      // reach sets ride as one 64-seed mask word per (chunk, node) row,
+      // so no hop materializes (seed, node) pair rows. edgesDeduped:
       // orderGraphEdges is DISTINCT and checkpointed by contract.
       // Per-hop checkpoints stay ON here (unlike g20/g21's adaptive
       // fuse): this build runs ONCE per session, COLD, and the fused

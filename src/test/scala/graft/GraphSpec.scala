@@ -223,7 +223,7 @@ class GraphSpec extends SparkSpec {
       (10L, 11L), (11L, 12L), (12L, 10L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val seeds = Seq(1L, 10L).toDF("seed")
-    val got = Graph.kHopCounts(edges, seeds, k = 3).collect()
+    val got = Graph.kHopCountsBitset(edges, seeds, k = 3).collect()
       .map(r => (r.getAs[Long]("seed"), r.getAs[Int]("dist")) ->
         r.getAs[Long]("n_nodes")).toMap
     // seed 1 walks the path: {2}, {3}, {4}

@@ -172,33 +172,12 @@ object ProbeMain {
       val tmp = java.nio.file.Files.createTempDirectory("pairsprof")
       lap("pairs-write")(graft.operators.Dedup.writePairIndex(
         docs, tmp.resolve("idx").toString))
-      // khop3: hop-by-hop laps (mirrors Graph.kHopCounts internals, with
-      // EAGER materialization per hop so each hop's cost is attributable)
+      // khop3: the shipped bitmask BFS, per-hop checkpoints vs fused
       val e0 = graft.queries.Shared.orderGraphEdges(spark, dir)
       lap("edges-build")(e0.count())
       val seeds = e0.select(col("src").as("seed")).distinct()
         .filter(col("seed") < 1000000 && col("seed") % 100 === 0)
       println(s"PAIRSPROF edges=${e0.count()} seeds=${seeds.count()}")
-      val e1 = e0.select(col("src"), col("dst")).distinct()
-        .localCheckpoint(false)
-      var visited = seeds.select(col("seed"), col("seed").as("node"))
-        .distinct().localCheckpoint(false)
-      var frontier = visited
-      (1 to 3).foreach { d =>
-        var n = 0L
-        lap(s"hop$d") {
-          val next = frontier.join(e1, col("node") === col("src"))
-            .select(col("seed"), col("dst").as("node")).distinct()
-            .join(visited, Seq("seed", "node"), "left_anti")
-            .localCheckpoint(false)
-          n = next.count()
-          visited = visited.unionByName(next)
-          frontier = next
-        }
-        println(s"PAIRSPROF hop$d rows=$n")
-      }
-      lap("khop3-full")(graft.operators.Graph.kHopCounts(e0, seeds, 3)
-        .write.format("noop").mode("overwrite").save())
       lap("khop3-bitset-cut")(graft.operators.Graph.kHopCountsBitset(
           e0, seeds, 3, edgesDeduped = true)
         .write.format("noop").mode("overwrite").save())
