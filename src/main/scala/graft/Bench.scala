@@ -158,20 +158,14 @@ object Bench {
     val streamingSamples: Seq[Double] = (1 to passes).map { _ =>
       val cpDir = Files.createTempDirectory("graft-bench-stream")
       try {
-        val rows = Tables.load(spark, sfDir, "events").count()
+        // a missing events file throws here and reports the sentinel
+        val events = Tables.load(spark, sfDir, "events")
+        val rows = events.count()
         val t0 = System.nanoTime()
-        // scale-adaptive state partitioning, the same discipline every
-        // k-family replay applies — see StreamOps.adaptiveStatePartitions
-        val eventsBytes = graft.streaming.StreamOps.pathBytes(
-          java.nio.file.Paths.get(sfDir, "events.parquet"))
-        // pathBytes returns 0 for a missing path; surface a fixture-layout
-        // drift instead of silently benching at the partition floor
-        // (ADVICE r14).
-        if (eventsBytes == 0L) System.err.println(
-          s"[bench] WARNING: $sfDir/events.parquet is missing or empty; " +
-          "streaming throughput will run at the state-partition floor")
+        // state partitions sized from the events table, the stream's
+        // batch twin — the same sizing every k-family replay applies
         val q = graft.streaming.StreamOps.withStatePartitions(spark,
-            eventsBytes) {
+            events) {
           graft.streaming.StreamOps.windowedCounts(
               graft.streaming.StreamOps.replayStream(spark, sfDir))
             .writeStream.format("noop")
@@ -187,15 +181,7 @@ object Bench {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] streaming measurement failed: $e")
           -1.0
-      } finally {
-        try {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(java.nio.file.Files.walk(cpDir)) { st =>
-            st.iterator().asScala.toSeq
-              .sortBy(-_.getNameCount).foreach(java.nio.file.Files.delete)
-          }
-        } catch { case scala.util.control.NonFatal(_) => () }
-      }
+      } finally graft.queries.Shared.deleteTree(cpDir)
     }
     val streamingRate: Double = streamingSamples.max
 

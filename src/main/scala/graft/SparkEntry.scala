@@ -30,16 +30,37 @@ object SparkEntry {
     (Extras9.defs, Extras9.oracles),
     (Extras10.defs, Extras10.oracles))
 
+  /** Merges per-group maps into one, refusing a name that two groups
+    * declare (a plain `++` would let the later group silently shadow
+    * the earlier one).
+    */
+  private[graft] def mergeUnique[V](maps: Seq[Map[String, V]])
+      : Map[String, V] =
+    maps.foldLeft(Map.empty[String, V]) { (acc, m) =>
+      val dup = acc.keySet intersect m.keySet
+      require(dup.isEmpty,
+        s"query names declared twice: ${dup.toSeq.sorted.mkString(", ")}")
+      acc ++ m
+    }
+
+  private lazy val registry = {
+    val qs = mergeUnique(groups.map(_._1))
+    val os = mergeUnique(groups.map(_._2))
+    require(qs.keySet == os.keySet,
+      s"queries without an oracle: ${(qs.keySet -- os.keySet).toSeq.sorted}" +
+        s"; oracles without a query: ${(os.keySet -- qs.keySet).toSeq.sorted}")
+    (qs, os)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q01_pricing_summary")(spark, "/root/testdata/sf0.001")
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    groups.map(_._1).reduce(_ ++ _)
+  def queries: Map[String, (SparkSession, String) => DataFrame] = registry._1
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    groups.map(_._2).reduce(_ ++ _)
+    * the same parquet tables; every query has one.
+    */
+  def oracleSql: Map[String, String] = registry._2
 }

@@ -409,10 +409,11 @@ object Graph {
     * a hop join is minutes and materializing V rows is not), and the
     * caller's `deltaOnly` mode always forces them (the changed-set diff
     * re-reads each hop's table — [[reachSketch]]'s own require). An
-    * input size of 0 or less is UNKNOWN (what
-    * [[graft.streaming.StreamOps.pathBytes]] returns for a path it cannot
-    * stat) and fails safe to checkpoints ON: the fused plan is only the
-    * cheap layout when the input is known to be small. Output is
+    * unknown size fails safe to checkpoints ON, since the fused plan is
+    * only the cheap layout when the input is known to be small:
+    * [[graft.streaming.StreamOps.inputBytes]] reports a source without
+    * statistics as `Long.MaxValue`, above the threshold, and a size of 0
+    * or less is treated as unknown too. Output is
     * invariant either way — the checkpoint is a lineage boundary, never
     * a semantic; A/B experiments pass `checkpoint =` directly.
     */

@@ -73,20 +73,6 @@ object Extras6 {
     Files.setLastModifiedTime(dest, FileTime.fromMillis(baseMs + k * 10000L))
   }
 
-  /** k20 core: the events stream split by type into a `view` stream and a
-    * `purchase` stream, each quartile-sliced into 4 files (every 19th
-    * event two batches late), joined stream-to-stream on user_id with the
-    * event-time bound `view_ts <= buy_ts < view_ts + 48h` under 24h
-    * watermarks on BOTH sides ([[graft.streaming.StreamOps.intervalJoin]])
-    * through MicroBatchExecution. Dual watermarks make BOTH join states
-    * GC-able: left rows evict once the (min-of-both-sides) watermark
-    * passes view_ts + 48h, right rows once it passes buy_ts — the
-    * condition's time range is what bounds unbounded-stream state.
-    *
-    * Returns (result, dataBatches, rowsDroppedByWatermark,
-    * stateRowsRemoved) so the spec can assert the multi-batch, late-drop
-    * and state-GC facts the CORRECTNESS row alone cannot show.
-    */
   /** The eight k20-family replay slices (2 sides × 4 quartiles), built
     * ONCE per (session, fixture dir) via [[Shared.memoDir]] and shared by
     * k20/k24/k26 and every same-session re-run (VERDICT r11 item 4) —
@@ -143,76 +129,66 @@ object Extras6 {
       } finally Shared.deleteTree(tmp)
     }
 
+  /** The k20 slices as the two streams every k20-family replay joins —
+    * views (user_id, view_id, view_ts) and purchases (buyer_id, buy_id,
+    * buy_ts) — with their batch twins.
+    */
+  private[graft] def k20Streams(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame, Seq[DataFrame]) = {
+    val root = k20SliceRoot(s, dir)
+    val (ls, lt) = Shared.sliceStream(s, root.resolve("l"))
+    val (rs, rt) = Shared.sliceStream(s, root.resolve("r"))
+    (ls.select(col("user_id"), col("event_id").as("view_id"),
+        col("ts").as("view_ts")),
+      rs.select(col("user_id").as("buyer_id"), col("event_id").as("buy_id"),
+        col("ts").as("buy_ts")),
+      Seq(lt, rt))
+  }
+
+  /** k20 core: the events stream split by type into a `view` stream and a
+    * `purchase` stream, each quartile-sliced into 4 files (every 19th
+    * event two batches late), joined stream-to-stream on user_id with the
+    * event-time bound `view_ts <= buy_ts < view_ts + 48h` under 24h
+    * watermarks on BOTH sides ([[graft.streaming.StreamOps.intervalJoin]])
+    * through MicroBatchExecution. Dual watermarks make BOTH join states
+    * GC-able: left rows evict once the (min-of-both-sides) watermark
+    * passes view_ts + 48h, right rows once it passes buy_ts — the
+    * condition's time range is what bounds unbounded-stream state.
+    *
+    * Returns (result, dataBatches, rowsDroppedByWatermark,
+    * stateRowsRemoved) so the spec can assert the multi-batch, late-drop
+    * and state-GC facts the CORRECTNESS row alone cannot show.
+    */
   private[graft] def intervalJoinReplay(s: SparkSession, dir: String,
       salts: Int = 0, hotKeys: Seq[Long] = Nil,
       joinType: String = "inner"): (DataFrame, Long, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k20-out")
-    val cp = Files.createTempDirectory("graft-k20-cp")
-    try {
-      val sliceRoot = k20SliceRoot(s, dir)
-      val lsrc = sliceRoot.resolve("l")
-      val rsrc = sliceRoot.resolve("r")
-      def fileStream(src: Path): DataFrame = {
-        val glob = s"$src/e*.parquet"
-        s.readStream.schema(s.read.parquet(glob).schema)
-          .option("maxFilesPerTrigger", 1).parquet(glob)
-      }
-      val left = fileStream(lsrc).select(col("user_id"),
-        col("event_id").as("view_id"), col("ts").as("view_ts"))
-      val right = fileStream(rsrc).select(col("user_id").as("buyer_id"),
-        col("event_id").as("buy_id"), col("ts").as("buy_ts"))
-      // salts > 0 routes through the skew-hardened twin (k24): identical
-      // output contract, state keys split across `salts` partitions.
-      // hotKeys non-empty routes through the hot-key-only twin (k26):
-      // same output contract again, but only the listed keys are salted.
-      val j = (if (hotKeys.nonEmpty)
-          graft.streaming.StreamOps.intervalJoinSaltedHot(left, right,
-            "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys,
-            within = "48 hours", lateness = "24 hours",
-            salts = math.max(salts, 1))
-        else if (salts > 0)
-          graft.streaming.StreamOps.intervalJoinSalted(left, right,
-            "user_id", "buyer_id", "view_ts", "buy_ts",
-            within = "48 hours", lateness = "24 hours", salts = salts)
-        else graft.streaming.StreamOps.intervalJoin(left, right,
-          "user_id", "buyer_id", "view_ts", "buy_ts",
+    val (left, right, twins) = k20Streams(s, dir)
+    // salts > 0 routes through the skew-hardened twin (k24): identical
+    // output contract, state keys split across `salts` partitions.
+    // hotKeys non-empty routes through the hot-key-only twin (k26):
+    // same output contract again, but only the listed keys are salted.
+    val j = (if (hotKeys.nonEmpty)
+        graft.streaming.StreamOps.intervalJoinSaltedHot(left, right,
+          "user_id", "buyer_id", "view_ts", "buy_ts", hotKeys,
           within = "48 hours", lateness = "24 hours",
-          joinType = joinType))
-        // a semi join emits only the left side's columns
-        .select((if (joinType == "left_semi")
-            Seq(col("user_id"), col("view_id"), col("view_ts"))
-          else Seq(col("user_id"), col("view_id"), col("buy_id"),
-            col("view_ts"), col("buy_ts"))): _*)
-      // scale-adaptive state partitioning (optimization-guide §2): the
-      // join's 4 state stores × shuffle-partitions each pay a fixed
-      // per-batch commit cost, so the partition count follows the input
-      // size instead of the session constant — measured 26.5 s → 4.9 s
-      // on the warm sf0.1 replay (see adaptiveStatePartitions scaladoc).
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(lsrc) +
-          graft.streaming.StreamOps.pathBytes(rsrc)) {
-        j.writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val dropped = progress.flatMap(_.stateOperators)
-        .map(_.numRowsDroppedByWatermark).sum
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("view_id") +: (if (joinType == "left_semi") Nil
-          else Seq(col("buy_id"))): _*)
-        .localCheckpoint()
-      (res, dataBatches, dropped, removed)
-    } finally {
-      // slice dirs are cache-owned (memoDir) — only per-run state dies
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+          salts = math.max(salts, 1))
+      else if (salts > 0)
+        graft.streaming.StreamOps.intervalJoinSalted(left, right,
+          "user_id", "buyer_id", "view_ts", "buy_ts",
+          within = "48 hours", lateness = "24 hours", salts = salts)
+      else graft.streaming.StreamOps.intervalJoin(left, right,
+        "user_id", "buyer_id", "view_ts", "buy_ts",
+        within = "48 hours", lateness = "24 hours",
+        joinType = joinType))
+      // a semi join emits only the left side's columns
+      .select((if (joinType == "left_semi")
+          Seq(col("user_id"), col("view_id"), col("view_ts"))
+        else Seq(col("user_id"), col("view_id"), col("buy_id"),
+          col("view_ts"), col("buy_ts"))): _*)
+    val d = Shared.drainToParquet(s, "k20", j, twins,
+      col("view_id") +: (if (joinType == "left_semi") Nil
+        else Seq(col("buy_id"))): _*)
+    (d.rows, d.dataBatches, d.rowsDroppedByWatermark, d.stateRowsRemoved)
   }
 
   /** k21 core: all events quartile-sliced IN ORDER (no late injection —
@@ -231,41 +207,18 @@ object Extras6 {
     */
   private[graft] def sessionReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k21-out")
-    val cp = Files.createTempDirectory("graft-k21-cp")
-    try {
-      val src = sliceRoot4(s, dir, "k21-slices", {
+    val (stream, twin) = Shared.sliceStream(s, sliceRoot4(s, dir,
+      "k21-slices", {
         val ev = t(s, dir, "events").select(col("event_id"),
           date_trunc("millisecond", col("ts")).as("ts"), col("user_id"))
         withFidx(ev, late = false)
           .select(col("ts"), col("user_id"), col("fidx"))
-      })
-      val glob = s"$src/e*.parquet"
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      // scale-adaptive state partitioning — see intervalJoinReplay
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
-        graft.streaming.StreamOps.sessionCounts(stream,
-            keyCol = "user_id", timeCol = "ts", gap = "12 hours",
-            lateness = "1 hour")
-          .writeStream.format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      }
-      q.awaitTermination()
-      val progress = q.recentProgress
-      val dataBatches = progress.count(_.numInputRows > 0).toLong
-      val removed = progress.flatMap(_.stateOperators)
-        .map(_.numRowsRemoved).sum
-      val res = s.read.parquet(out.toString)
-        .orderBy(col("user_id"), col("session_start")).localCheckpoint()
-      (res, dataBatches, removed)
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
-    }
+      }))
+    val d = Shared.drainToParquet(s, "k21",
+      graft.streaming.StreamOps.sessionCounts(stream, keyCol = "user_id",
+        timeCol = "ts", gap = "12 hours", lateness = "1 hour"),
+      Seq(twin), col("user_id"), col("session_start"))
+    (d.rows, d.dataBatches, d.stateRowsRemoved)
   }
 
   /** k22 core: exactly-once delivery to an idempotent sink DEMONSTRATED,
@@ -381,10 +334,8 @@ object Extras6 {
       // multi-GB graphs keep the constant-lineage checkpoints)
       Graph.reachSketch(e, seeds, k = 3, m = 64, edgesDeduped = true,
         checkpoint = Graph.adaptiveHopCheckpoint(
-          graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "orders.parquet")) +
-          graft.streaming.StreamOps.pathBytes(
-            java.nio.file.Paths.get(dir, "lineitem.parquet"))))
+          graft.streaming.StreamOps.inputBytes(
+            t(s, dir, "orders"), t(s, dir, "lineitem"))))
     })
 
   /** The k20-family cutoff model as a shared DuckDB CTE prefix (ADVICE

@@ -50,20 +50,14 @@ object Extras9 {
     */
   private[graft] def updateAggReplay(s: SparkSession, dir: String)
       : (DataFrame, Long, Long) = {
-    val out = Files.createTempDirectory("graft-k29-out")
-    val cp = Files.createTempDirectory("graft-k29-cp")
-    try {
-      val src = Extras7.k23Slices(s, dir)
-      val glob = s"$src/e*.parquet"
-      val stream = s.readStream.schema(s.read.parquet(glob).schema)
-        .option("maxFilesPerTrigger", 1).parquet(glob)
-      val agg = stream.groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_cum"),
-          sum(col("value").cast(dec2)).as("sum_dec"))
-      // scale-adaptive state partitioning — see
-      // StreamOps.adaptiveStatePartitions
-      val q = graft.streaming.StreamOps.withStatePartitions(s,
-          graft.streaming.StreamOps.pathBytes(src)) {
+    val (stream, twin) = Shared.sliceStream(s, Extras7.k23Slices(s, dir))
+    val agg = stream.groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_cum"),
+        sum(col("value").cast(dec2)).as("sum_dec"))
+    // update mode: the file sink is append-only, so this replay keeps its
+    // own foreachBatch sink inside the runner's per-run dirs
+    Shared.withRunDirs("k29") { (out, cp) =>
+      val q = graft.streaming.StreamOps.withStatePartitions(s, twin) {
         agg.writeStream.outputMode("update")
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
             // no '=' in the dir name: partition inference would otherwise
@@ -76,12 +70,8 @@ object Extras9 {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
       }
-      q.awaitTermination()
-      // recentProgress is safe HERE (unlike the rocksdb-engagement signal
-      // ADVICE r12 moved to lastProgress-first): the ring buffer holds
-      // spark.sql.streaming.numRecentProgressUpdates entries (default
-      // 100), far above this replay's 4-5 batches, and the count is read
-      // strictly after awaitTermination() so no event is still in flight.
+      try q.awaitTermination() finally q.stop()
+      // read after termination: the progress buffer holds every batch
       val dataBatches = q.recentProgress.count(_.numInputRows > 0).toLong
       import scala.jdk.CollectionConverters._
       val updateBatches = scala.util.Using.resource(Files.list(out)) { st =>
@@ -95,8 +85,6 @@ object Extras9 {
       val res = s.read.parquet(s"$out/b*")
         .orderBy(col("user_id"), col("batch_id")).localCheckpoint()
       (res, dataBatches, updateBatches)
-    } finally {
-      Shared.deleteTree(out); Shared.deleteTree(cp)
     }
   }
 

@@ -1,12 +1,15 @@
 package graft.queries
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryProgress
 
 import graft.Tables
 import graft.operators.{Dedup, Graph}
+import graft.sinks.Sinks
+import graft.streaming.StreamOps
 
 /** Session-scoped shared analysis artifacts (VERDICT r7 item 3).
   *
@@ -191,6 +194,68 @@ private[graft] object Shared {
       else { trackTempDir(app, path); path }
     }
   }
+
+  /** Per-run sink and checkpoint temp dirs for a streaming replay, both
+    * deleted when `body` ends, however it ends.
+    */
+  private[graft] def withRunDirs[T](tag: String)(body: (Path, Path) => T)
+      : T = {
+    val out = Files.createTempDirectory(s"graft-$tag-out")
+    try {
+      val cp = Files.createTempDirectory(s"graft-$tag-cp")
+      try body(out, cp) finally deleteTree(cp)
+    } finally deleteTree(out)
+  }
+
+  /** One-file-per-micro-batch stream over the `e*.parquet` slices under
+    * `root` (their pinned mtimes order the batches), paired with its
+    * batch twin: the same files read as a batch, which supplies the
+    * stream's schema and is what [[drainToParquet]] sizes. A missing
+    * slice dir fails here, at analysis.
+    */
+  private[graft] def sliceStream(s: SparkSession, root: Path)
+      : (DataFrame, DataFrame) = {
+    val glob = s"$root/e*.parquet"
+    val twin = s.read.parquet(glob)
+    (s.readStream.schema(twin.schema).option("maxFilesPerTrigger", 1)
+      .parquet(glob), twin)
+  }
+
+  /** What a [[drainToParquet]] run returns: the sink's rows, pinned in
+    * session memory, and the run's progress events.
+    */
+  private[graft] final case class Drained(rows: DataFrame,
+      progress: Seq[StreamingQueryProgress]) {
+    def dataBatches: Long = progress.count(_.numInputRows > 0).toLong
+    def rowsDroppedByWatermark: Long =
+      progress.flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    def stateRowsRemoved: Long =
+      progress.flatMap(_.stateOperators).map(_.numRowsRemoved).sum
+    def rocksDbEngaged: Boolean = {
+      import scala.jdk.CollectionConverters._
+      progress.flatMap(_.stateOperators).exists(_.customMetrics.keySet()
+        .asScala.exists(_.toLowerCase.contains("rocksdb")))
+    }
+  }
+
+  /** The streaming replay runner: drains `stream` under AvailableNow
+    * into a [[Sinks.parquetSink]], with its state partitions sized from
+    * the batch `twins` ([[StreamOps.withStatePartitions]]), and returns
+    * the sink's rows sorted by `sortBy` and `localCheckpoint`ed, so the
+    * run's sink and checkpoint dirs are gone when it returns, whether
+    * the query succeeded or failed. The progress is read after
+    * termination, when the query's progress buffer holds every batch.
+    */
+  private[graft] def drainToParquet(s: SparkSession, tag: String,
+      stream: DataFrame, twins: Seq[DataFrame], sortBy: Column*): Drained =
+    withRunDirs(tag) { (out, cp) =>
+      val q = StreamOps.withStatePartitions(s, twins: _*) {
+        Sinks.parquetSink(stream, out.toString, cp.toString)
+      }
+      try q.awaitTermination() finally q.stop()
+      Drained(s.read.parquet(out.toString).orderBy(sortBy: _*)
+        .localCheckpoint(), q.recentProgress.toSeq)
+    }
 
   /** The certified near-dup pair set — [[Dedup.minhashPairs]] with its
     * default parameters over the plain `documents` table — computed once

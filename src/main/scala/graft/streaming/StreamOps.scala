@@ -351,35 +351,45 @@ object StreamOps {
     * coalesced. The floor (default 4) keeps multi-partition state
     * semantics (cross-partition watermark min, salted-skew spread)
     * exercised even on toy inputs. Output is partition-count-invariant:
-    * state partitioning is a hash layout, never a semantic.
+    * state partitioning is a hash layout, never a semantic. An unknown
+    * size ([[inputBytes]] of a source without statistics is
+    * `Long.MaxValue`) selects the ceiling: the small layout is only
+    * taken when the input is known to be small.
     */
   def adaptiveStatePartitions(s: SparkSession, inputBytes: Long,
       targetBytesPerPartition: Long = 64L << 20,
-      minPartitions: Int = 4): Int =
-    // manual operational override (also how the before/after experiments
-    // force the pre-adaptive layout at any SF): when set to a positive
-    // int, it wins verbatim; anything else (malformed, zero, negative —
-    // e.g. an env var leaking into sbt test) is rejected loudly and the
-    // adaptive value applies, rather than starting a broken query deep
-    // inside a replay (ADVICE r14).
-    sys.env.get("SPARK_GRAFT_STREAM_SHUFFLE").flatMap { v =>
-      val parsed = v.toIntOption.filter(_ > 0)
-      if (parsed.isEmpty) System.err.println(
-        s"[graft] ignoring invalid SPARK_GRAFT_STREAM_SHUFFLE='$v' " +
-        "(need a positive int); using the adaptive value")
-      parsed
-    }.getOrElse {
-      val ceiling = s.conf.get("spark.sql.shuffle.partitions").toInt
-      math.max(1, math.min(ceiling, math.max(minPartitions,
-        math.ceil(inputBytes.toDouble / targetBytesPerPartition).toInt)))
-    }
+      minPartitions: Int = 4): Int = {
+    val ceiling = s.conf.get("spark.sql.shuffle.partitions").toInt
+    math.max(1, math.min(ceiling, math.max(minPartitions,
+      math.ceil(inputBytes.toDouble / targetBytesPerPartition).toInt)))
+  }
 
-  /** Run `body` (typically `writeStream…start(); awaitTermination()`)
-    * with `spark.sql.shuffle.partitions` set to
-    * [[adaptiveStatePartitions]] of `inputBytes`, restoring the previous
-    * value after. The streaming query pins its state-partition count
-    * from the session conf at `start()`, so scoping the override to the
-    * replay leaves every batch query in the session untouched.
+  /** Spark's own size estimate of `frames`: the sum of each optimized
+    * plan's `stats.sizeInBytes`, saturating at `Long.MaxValue`. For
+    * parquet that is the data files' total size on any Hadoop filesystem
+    * (no `.crc`/`_SUCCESS` side files); for a source without statistics
+    * (an RDD-backed frame) it is `spark.sql.defaultSizeInBytes`, which
+    * defaults to `Long.MaxValue`, so sizing fails safe to the large
+    * layout. A missing path fails when the frame is built, never reads
+    * as 0. The frames must be BATCH plans: a streaming plan has no
+    * statistics, so a replay passes its source's batch twin.
+    */
+  def inputBytes(frames: DataFrame*): Long = {
+    // no frame would read as 0 bytes, the cheapest layout
+    require(frames.nonEmpty, "inputBytes needs at least one frame")
+    frames.foreach(f => require(!f.isStreaming,
+      "inputBytes needs the batch twin of a streaming source: a " +
+        "streaming plan has no statistics"))
+    frames.map(_.queryExecution.optimizedPlan.stats.sizeInBytes).sum
+      .min(BigInt(Long.MaxValue)).toLong
+  }
+
+  /** Run `body` (typically `writeStream…start()`) with
+    * `spark.sql.shuffle.partitions` set to [[adaptiveStatePartitions]]
+    * of the batch twins' [[inputBytes]], restoring the previous value
+    * after. The streaming query pins its state-partition count from the
+    * session conf at `start()`, so scoping the override to the replay
+    * leaves every batch query in the session untouched.
     *
     * NOT concurrency-safe (ADVICE r14): the override mutates the shared
     * session conf for the duration of `body`, so a query started
@@ -388,26 +398,13 @@ object StreamOps {
     * tests) starts queries sequentially; a future concurrent harness
     * must run each replay on `spark.newSession()` instead.
     */
-  def withStatePartitions[T](s: SparkSession, inputBytes: Long)
+  def withStatePartitions[T](s: SparkSession, twins: DataFrame*)
       (body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
+    val n = adaptiveStatePartitions(s, inputBytes(twins: _*))
     val prev = s.conf.get(key)
-    s.conf.set(key, adaptiveStatePartitions(s, inputBytes).toString)
+    s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
-  }
-
-  /** Total bytes under a path (file, or directory walked recursively) —
-    * the `inputBytes` feeder for [[withStatePartitions]] when the stream
-    * replays local files.
-    */
-  def pathBytes(p: java.nio.file.Path): Long = {
-    import scala.jdk.CollectionConverters._
-    if (!java.nio.file.Files.exists(p)) 0L
-    else scala.util.Using.resource(java.nio.file.Files.walk(p)) { st =>
-      st.iterator().asScala
-        .filter(java.nio.file.Files.isRegularFile(_))
-        .map(java.nio.file.Files.size).sum
-    }
   }
 
   /** Streaming file-replay of the events table in the 7-column

@@ -7,9 +7,18 @@ package graft
   */
 class QueriesSpec extends SparkSpec {
 
-  test("oracleSql keys are a subset of queries keys") {
-    val extra = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(extra.isEmpty, s"oracle entries without queries: $extra")
+  test("oracleSql keys equal queries keys") {
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+  }
+
+  test("the registry merge refuses a name that two groups declare") {
+    val a = Map("x_one" -> 1, "x_dup" -> 2)
+    val b = Map("x_dup" -> 3, "x_two" -> 4)
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.mergeUnique(Seq(a, b)))
+    assert(e.getMessage.contains("x_dup"), e.getMessage)
+    assert(!e.getMessage.contains("x_one"), e.getMessage)
+    assert(SparkEntry.mergeUnique(Seq(a, Map("x_two" -> 4))).size === 3)
   }
 
   test("every query runs at sf0.001") {

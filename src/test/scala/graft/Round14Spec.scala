@@ -288,18 +288,20 @@ class Round14Spec extends SparkSpec {
     val cp = java.nio.file.Files.createTempDirectory("graft-r14-adapt-cp")
     try {
       spark.conf.set(key, "16")
-      // a 1-byte "input": the adaptive count must be the floor (4),
+      import spark.implicits._
+      val rows = Seq((new java.sql.Timestamp(1700000000000L), "a"),
+        (new java.sql.Timestamp(1700000300000L), "b"))
+      // a two-row batch twin: the adaptive count must be the floor (4),
       // not the raised session value (16)
-      val q = StreamOps.withStatePartitions(spark, 1L) {
+      val q = StreamOps.withStatePartitions(spark,
+          rows.toDF("timestamp", "key")) {
         // conf is overridden INSIDE the scope…
         assert(spark.conf.get(key) === "4")
         import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-        import spark.implicits._
         implicit val sqlCtx: org.apache.spark.sql.SQLContext =
           spark.sqlContext
         val mem = MemoryStream[(java.sql.Timestamp, String)]
-        mem.addData((new java.sql.Timestamp(1700000000000L), "a"),
-          (new java.sql.Timestamp(1700000300000L), "b"))
+        mem.addData(rows: _*)
         StreamOps.windowedCounts(mem.toDF().toDF("timestamp", "key"))
           .writeStream.format("noop")
           .option("checkpointLocation", cp.toString)
@@ -321,6 +323,71 @@ class Round14Spec extends SparkSpec {
     } finally {
       spark.conf.set(key, prev)
       graft.queries.Shared.deleteTree(cp)
+    }
+  }
+
+  test("inputBytes is Spark's plan size: a parquet table reads as its " +
+      "file bytes, a source without statistics sizes to the session " +
+      "ceiling, and a streaming frame is refused") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val events = graft.Tables.load(spark, sf, "events")
+    assert(StreamOps.inputBytes(events) === java.nio.file.Files.size(
+      java.nio.file.Paths.get(sf, "events.parquet")))
+    // an RDD-backed frame has no statistics: its size is
+    // spark.sql.defaultSizeInBytes, Long.MaxValue unless configured
+    val unknown = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L))),
+      StructType(Seq(StructField("x", LongType))))
+    assert(StreamOps.inputBytes(unknown) === Long.MaxValue)
+    assert(StreamOps.inputBytes(unknown, events) === Long.MaxValue,
+      "the sum must saturate, not overflow")
+    val ceiling = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(StreamOps.adaptiveStatePartitions(spark,
+      StreamOps.inputBytes(unknown)) === ceiling)
+    val e = intercept[IllegalArgumentException](
+      StreamOps.inputBytes(StreamOps.eventStream(spark, sf)))
+    assert(e.getMessage.contains("batch twin"))
+    // no frame at all would size as 0 bytes, the cheapest layout
+    intercept[IllegalArgumentException](StreamOps.inputBytes())
+  }
+
+  test("a replay over a missing slice dir fails at analysis") {
+    val missing = java.nio.file.Files.createTempDirectory("graft-r14-gone")
+    graft.queries.Shared.deleteTree(missing)
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      graft.queries.Shared.sliceStream(spark, missing))
+    assert(e.getMessage.contains("PATH_NOT_FOUND"), e.getMessage)
+  }
+
+  test("a replay whose query fails leaves no sink or checkpoint dir " +
+      "behind and restores spark.sql.shuffle.partitions") {
+    import scala.jdk.CollectionConverters._
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    val tag = s"failing-replay-${System.nanoTime()}"
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def runDirs() = scala.util.Using.resource(
+        java.nio.file.Files.list(tmpRoot)) { st =>
+      st.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith(s"graft-$tag")).toList
+    }
+    val src = writeSlices(Seq(Seq((1L, 2L, 1700000000000L))),
+      Seq("a", "b", "ts"))
+    try {
+      spark.conf.set(key, "16")
+      val (stream, twin) = graft.queries.Shared.sliceStream(spark, src)
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        graft.queries.Shared.drainToParquet(spark, tag,
+          stream.select(col("a"), when(col("a") >= 0,
+            raise_error(lit("injected replay failure"))).as("x")),
+          Seq(twin), col("a")))
+      assert(e.getMessage.contains("injected replay failure"), e.getMessage)
+      assert(runDirs().isEmpty, s"left behind: ${runDirs()}")
+      assert(spark.conf.get(key) === "16")
+    } finally {
+      spark.conf.set(key, prev)
+      graft.queries.Shared.deleteTree(src)
     }
   }
 }

@@ -113,10 +113,11 @@ class Round15Spec extends SparkSpec {
     assert(Graph.adaptiveHopCheckpoint((1L << 30) + 1))
     // g20/g21 size their layout from these two tables: the fixture must
     // read as known and small, or the spec runs the checkpointed layout
-    val bytes = Seq("orders.parquet", "lineitem.parquet").map(t =>
-      graft.streaming.StreamOps.pathBytes(java.nio.file.Paths.get(sf, t)))
-    assert(bytes.forall(_ > 0), s"fixture tables not found: $bytes")
-    assert(!Graph.adaptiveHopCheckpoint(bytes.sum))
+    val bytes = graft.streaming.StreamOps.inputBytes(
+      graft.Tables.load(spark, sf, "orders"),
+      graft.Tables.load(spark, sf, "lineitem"))
+    assert(bytes > 0, s"fixture tables sized $bytes")
+    assert(!Graph.adaptiveHopCheckpoint(bytes))
   }
 
   test("kHopCountsBitset with an empty seed set returns an empty frame " +
